@@ -36,7 +36,9 @@ object Jq {
   def evalWithMeta(q: String, jsonCol: Column, metaJsonCol: Column): Column =
     toCol(JqEvalMeta(JqParser.parse(q), q, toExpr(jsonCol), toExpr(metaJsonCol)))
 
-  /** First successful output as a typed scalar (NULL if none / mismatch). */
+  /** First successful output as a typed scalar (NULL if none / mismatch).
+    * Over a STRING column only the top-level fields the program reads are
+    * parsed, when `.key` is its only access to the document root. */
   def string(q: String, jsonCol: Column): Column =
     toCol(JqExtract(JqParser.parse(q), q, "string", toExpr(jsonCol)))
   def long(q: String, jsonCol: Column): Column =
@@ -54,7 +56,10 @@ object Jq {
   /** Several typed extractions fused over ONE parse of the document:
     * fields = (name, query, kind) with kind ∈ string|long|double|bool;
     * returns a STRUCT column. Use when a projection extracts 2+ values
-    * from the same JSON column. */
+    * from the same JSON column. Over a STRING column only the top-level
+    * fields the programs read are parsed (the whole document when one of
+    * them needs more than `.key` accesses at its root). A field whose
+    * program fails is NULL; the others keep their values. */
   def multi(fields: Seq[(String, String, String)], jsonCol: Column): Column = {
     val parsed = fields.map { case (n, q, k) => (n, JqParser.parse(q), k) }
     toCol(graft.jq.JqMulti(parsed, fields.map(_._2).mkString("; "), toExpr(jsonCol)))

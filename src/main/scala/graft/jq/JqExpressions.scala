@@ -25,7 +25,7 @@ import graft.json._
   * Round 2: two hot-path upgrades over the round-1 text-only CodegenFallback
   * versions —
   *   1. input is converted to [[JDoc]] straight from Spark internal values
-  *      ([[JqInput]]): STRING parses as JSON text (unchanged), but STRUCT /
+  *      ([[JqInput]]): STRING parses as JSON text from its bytes, but STRUCT /
   *      ARRAY / MAP / VARIANT / scalars convert structurally with no
   *      serialize→re-parse round trip;
   *   2. [[doGenCode]] emits a direct call on the expression instance (via
@@ -56,9 +56,14 @@ private[jq] object JqGuard {
 
 trait JqNativeInput extends UnaryExpression {
 
+  /** Top-level keys of a STRING document the expression reads, when it
+    * reads nothing else of it; None parses the whole document. */
+  protected def rootKeys: Option[Set[String]] = None
+
   /** Resolved once on the driver from the child's type — the per-row path
     * is a monomorphic converter + compiled-pipeline call. */
-  @transient protected final lazy val inputConv: JqInput.Conv = JqInput.converter(child.dataType)
+  @transient protected final lazy val inputConv: JqInput.Conv =
+    JqInput.converter(child.dataType, rootKeys)
 
   /** Run `compiled` over one input value; malformed JSON *text* becomes the
     * errors-as-data record, never an exception (reference: src/entry.rs:5-10). */
@@ -156,9 +161,14 @@ case class JqDocs(ast: Ast, queryText: String, child: Expression) extends JqNati
 
 /** Typed extraction of the FIRST successful output of a jq pipeline;
   * SQL NULL when there is no output, the output errored, or the value
-  * doesn't fit the requested type. Kinds: string | long | double | bool. */
+  * doesn't fit the requested type. Kinds: string | long | double | bool.
+  *
+  * Over a STRING document only the top-level fields the program reads are
+  * parsed ([[JqDemand.rootKeys]]): error text is dropped and nothing is
+  * re-serialized, so the result cannot tell. */
 case class JqExtract(ast: Ast, queryText: String, kind: String, child: Expression)
     extends JqNativeInput {
+  override protected def rootKeys: Option[Set[String]] = JqDemand.rootKeys(ast)
   override def dataType: DataType = kind match {
     case "long"   => LongType
     case "double" => DoubleType
@@ -220,7 +230,7 @@ case class JqEvalMeta(ast: Ast, queryText: String,
     val metaObj: Option[JObj] =
       if (m == null) None
       else
-        try JsonText.parse(m.asInstanceOf[UTF8String].toString) match {
+        try JqInput.parseJson(m.asInstanceOf[UTF8String]) match {
           // normalize on seed (reference meta.rs Meta::some invariant):
           // every envelope carries all of domains/sources/keys, so a
           // seeded envelope missing `keys` cannot propagate verbatim
@@ -272,9 +282,17 @@ object JqEvalMeta {
   * single input conversion — returns STRUCT<name: typedValue, ...>. N
   * extractions of the same column otherwise each re-convert the document;
   * this fuses them (the same way a reader fuses column decoders). Field
-  * kinds follow [[JqExtract]] (string | long | double | bool). */
+  * kinds follow [[JqExtract]] (string | long | double | bool), and so does
+  * the projection: over a STRING document only the top-level fields some
+  * program reads are parsed, unless one program needs the whole document.
+  * Each field is evaluated on its own errors-as-data path: a field whose
+  * program fails is NULL, the others keep their values. */
 case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child: Expression)
     extends JqNativeInput {
+  override protected def rootKeys: Option[Set[String]] =
+    fields.foldLeft(Option(Set.empty[String])) { case (acc, (_, ast, _)) =>
+      for (keys <- acc; more <- JqDemand.rootKeys(ast)) yield keys ++ more
+    }
   @transient private lazy val compiled = fields.map { case (_, ast, _) => Interp.compile(ast) }
   override def dataType: DataType = StructType(fields.map { case (name, _, kind) =>
     StructField(name, kind match {
@@ -294,7 +312,7 @@ case class JqMulti(fields: Seq[(String, Ast, String)], queryText: String, child:
     if (doc != null) {
       var i = 0
       while (i < fields.length) {
-        values(i) = compiled(i)(doc, Nil).find(_.errors.isEmpty) match {
+        values(i) = JqGuard.entries(compiled(i)(doc, Nil)).find(_.errors.isEmpty) match {
           case None     => null
           case Some(en) => JqEval.extract(fields(i)._3, en.doc)
         }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.types.variant.{Variant, VariantUtil}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
 import graft.json._
@@ -12,8 +13,12 @@ import graft.json._
   * [[JDoc]] — the round-2 replacement for the `to_json` → text → re-parse
   * bridge (SURVEY.md §1.4's dynamic-value design).
   *
-  * Semantics: a STRING input is still *parsed* as JSON text (the engine's
-  * document streams are JSON text, reference src/json.rs:123-160); every
+  * Semantics: a STRING input is a JSON document (the engine's document
+  * streams are JSON text, reference src/json.rs:123-160), parsed straight
+  * from its UTF-8 bytes with no intermediate `String`. Given the top-level
+  * keys a program reads ([[JqDemand.rootKeys]]), only those fields are
+  * built; the rest of the document is validated but not materialized, so
+  * a malformed document is still rejected with the same message. Every
   * other supported type converts structurally with NO serialization:
   *
   *   - STRUCT → object (null fields omitted, matching `to_json`'s default
@@ -49,12 +54,30 @@ object JqInput {
   }
 
   /** Converter for a *top-level* input column. STRING means JSON text and
-    * may throw [[JsonText.JsonParseException]]; all other types are
-    * non-throwing structural conversions. */
-  def converter(dt: DataType): Conv = dt match {
-    case StringType => v => JsonText.parse(v.asInstanceOf[UTF8String].toString)
-    case other      => valueConverter(other)
+    * may throw [[JsonText.JsonParseException]]; with `rootKeys` a document
+    * whose root is an object is built with just those top-level keys. All
+    * other types are non-throwing structural conversions. */
+  def converter(dt: DataType, rootKeys: Option[Set[String]] = None): Conv = dt match {
+    case StringType =>
+      rootKeys match {
+        case Some(keys) =>
+          val proj = new JsonText.Projection(keys)
+          v => withBytes(v.asInstanceOf[UTF8String])(JsonText.parseProjected(_, _, _, proj))
+        case None => v => parseJson(v.asInstanceOf[UTF8String])
+      }
+    case other => valueConverter(other)
   }
+
+  /** Parse JSON text from a Spark string without decoding it to a `String`. */
+  def parseJson(s: UTF8String): JDoc = withBytes(s)(JsonText.parse(_, _, _))
+
+  /** `f(bytes, offset, length)` over the string's UTF-8 bytes, in place when
+    * they live in a heap array. */
+  private def withBytes[A](s: UTF8String)(f: (Array[Byte], Int, Int) => A): A =
+    s.getBaseObject match {
+      case a: Array[Byte] => f(a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _              => val b = s.getBytes; f(b, 0, b.length)
+    }
 
   /** Structural converter: a STRING here is a string *value* (struct field,
     * array element), not a JSON document. */

@@ -248,9 +248,7 @@ object Dedup {
     // join exchanges; the O(corpus chars) gram stream never crosses the
     // network. Both branches (grams, text) fork from the same
     // repartitioned frame, so the doc shuffle is one reused exchange.
-    val spark = docs.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      docs.rdd.getNumPartitions)
+    val parts = Layout.sizedPartitions(docs)
     val d0 = docs.select(col(id).as("d"), text.as("__t0"))
       .repartition(parts, col("d"))
     val grams = d0.select(col("d"),

@@ -19,6 +19,25 @@ import org.apache.spark.sql.functions._
   * SQL (the magic-constant bit spread), no kernel needed. */
 object Layout {
 
+  /** Partition count for an explicit repartition of `df`: the optimizer's
+    * size estimate over `spark.sql.files.maxPartitionBytes`, floored at the
+    * default parallelism (and taken as the floor when the size is unknown).
+    * Metadata-only: unlike `df.rdd.getNumPartitions` it builds no physical
+    * plan, so it neither plans the upstream twice nor finalizes an adaptive
+    * plan. */
+  private[operators] def sizedPartitions(df: DataFrame): Int = {
+    val spark = df.sparkSession
+    val floor = spark.sparkContext.defaultParallelism
+    val conf = spark.sessionState.conf
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (size >= conf.defaultSizeInBytes) floor
+    else {
+      val perPartition = math.max(1L, conf.filesMaxPartitionBytes)
+      val n = (size + perPartition - 1) / perPartition
+      math.max(floor, n.min(Int.MaxValue).toInt)
+    }
+  }
+
   /** Spread the low 16 bits of `c` to even positions (0,2,4,…,30) —
     * the classic mask-doubling network (public-domain "Bit Twiddling
     * Hacks" / Morton-code construction). */

@@ -696,13 +696,11 @@ object TextAnalysis {
     // partition, serializing the gram-sized work downstream; an explicit
     // count (REPARTITION_BY_NUM — AQE never coalesces it) fixes that
     // root cause. The count is scale-adaptive, not a local constant:
-    // the input's scan partitioning already reflects corpus bytes
-    // (maxPartitionBytes sizing), and the gram explode amplifies each
-    // doc's bytes only by the small factor n, so scan partitions floored
-    // by cluster parallelism keep per-task gram work bounded at any SF.
-    val spark = docs.sparkSession
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      docs.rdd.getNumPartitions)
+    // it is the input's estimated bytes over maxPartitionBytes, and the
+    // gram explode amplifies each doc's bytes only by the small factor n,
+    // so that count floored by cluster parallelism keeps per-task gram
+    // work bounded at any SF.
+    val parts = Layout.sizedPartitions(docs)
     val base = docs.select(col(id), text.as("__t")).repartition(parts, col(id))
     def gramCounts(n: Int) = base
       .select(col(id), explode(wordGrams(col("__t"), n)).as("g"))

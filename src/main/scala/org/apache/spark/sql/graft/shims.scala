@@ -108,11 +108,17 @@ object ColumnBridge {
 
   /** Bytes held in the block manager for `rddId` (memory + disk), if that
     * RDD is tracked there. The truthful size source for an eagerly
-    * materialized local checkpoint. */
+    * materialized local checkpoint. Asked of the block manager master,
+    * which every block store reports to before its task ends: the
+    * `getRDDStorageInfo` view is fed by the listener bus and can still
+    * miss the blocks of a job that has just finished. */
   def persistedBytes(spark: org.apache.spark.sql.SparkSession,
-                     rddId: Int): Option[Long] =
-    spark.sparkContext.getRDDStorageInfo
-      .find(_.id == rddId)
-      .map(i => i.memSize + i.diskSize)
-      .filter(_ > 0)
+                     rddId: Int): Option[Long] = {
+    val bytes = spark.sparkContext.env.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks)
+      .collect { case (id: org.apache.spark.storage.RDDBlockId, st) if id.rddId == rddId =>
+        st.memSize + st.diskSize }
+      .sum
+    Some(bytes).filter(_ > 0)
+  }
 }

@@ -184,6 +184,55 @@ class JqSparkSpec extends SparkTestBase {
 
   private val gen2 = Gen.zip(genDoc(2), genDoc(2))
 
+  test("STRING extracts: projected parsing gives the full parse's results, malformed rows included") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.ColumnBridge
+    import graft.jq.{Ast, JqDemand, JqExtract, JqMulti, JqParser}
+    val texts = Seq(
+      """{"grp": 1, "score": 2.5, "kind": "a", "vals": [10, 60, 70], "meta": {"src": "x", "depth": 3},
+         "qty": 80, "items": [{"n": 1, "price": 2.5}, {"n": 4}], "tags": ["red"], "name": "é😀"}""",
+      """{"grp": 1, "grp": 2, "score": "s", "score": 3, "qty": 10, "qty": null}""",
+      """{"~u0067rp": 5, "name": "a~"b", "n~u0061me": "c", "kind": "~ud83d~ude00"}""",
+      """{"grp": 1, "other": [1, 2,}""", """{"grp": 1, "x": 1e}""", """{"grp": 1, "x": "~ud800"}""",
+      """{"grp": 1, "score": 2""", """{"grp": 1} x""", """{"grp": 1, "x": tru}""",
+      """{"grp": 1, "d": """ + "[" * 600 + "]" * 600 + "}",
+      """{"grp": 1, "d": """ + "[" * 500 + "]" * 500 + "}",
+      "[1, 2]", "\"str\"", "3", "null", "", "   ",
+      """{"grp": 9223372036854775808, "score": 1e400, "qty": 00, "kind": -0}""",
+      """{"kind": "日本", "name": "~u00e9", "tags": ["blue", "red"], "items": []}""",
+      null).map(t => if (t == null) null else t.replace('~', '\\')) // `~` stands for a backslash
+    // raw invalid UTF-8, in a skipped value and in a key
+    val raw = Seq("7B22677270223A312C2278223A22FF227D", "7B22677270223A312CFF3A317D")
+    val df = texts.toDF("doc").union(raw.toDF("h").selectExpr("cast(unhex(h) as string) AS doc"))
+    val progs = Seq(".grp", ".score", ".kind", "[.vals | .[] | select(. > 50)] | length", ".meta.src",
+      ".score * 2 - 1", "if .qty > 50 then \"hi\" else \"lo\" end", ".items | map(.n) | add",
+      ".meta.depth", "[.. | numbers] | length", "[.tags | .[] | select(. == \"red\")] | length > 0",
+      ".items | .[0] | .price", ".name", "{g: .grp, kind}", ".grp // .score", "\"\\(.kind)-\\(.grp)\"", "1")
+    val doc = ColumnBridge.expression(col("doc"))
+    // an empty `def` block changes no result but hides the program from the
+    // root-key analysis, which forces the full parse
+    def program(p: String, project: Boolean): Ast =
+      if (project) JqParser.parse(p) else Ast.Defs(Nil, JqParser.parse(p))
+    assert(progs.count(p => JqDemand.rootKeys(program(p, project = true)).isDefined) == progs.size - 1)
+    assert(progs.forall(p => JqDemand.rootKeys(program(p, project = false)).isEmpty))
+    def extract(p: String, kind: String, project: Boolean) =
+      ColumnBridge.column(JqExtract(program(p, project), p, kind, doc))
+    val cols = for (p <- progs; kind <- Seq("long", "double", "bool", "string"); project <- Seq(true, false))
+      yield extract(p, kind, project)
+    val fields = Seq(("g", ".grp", "long"), ("q", ".qty", "long"), ("s", ".score", "double"),
+      ("n", ".name", "string"), ("t", "[.tags | .[] | select(. == \"red\")] | length > 0", "bool"))
+    def multi(project: Boolean) = ColumnBridge.column(JqMulti(
+      fields.map { case (n, q, k) => (n, program(q, project), k) }, "", doc))
+    val rows = df.select(cols :+ multi(true) :+ multi(false): _*).collect()
+    assert(rows.length == texts.length + raw.length)
+    rows.foreach { r =>
+      r.toSeq.grouped(2).foreach { case Seq(projected, full) => assert(projected == full, r) }
+    }
+    // five documents parse and hold an integer `.grp`; the rest give NULL
+    val grp = rows.map(_.get(0))
+    assert(grp.count(_ != null) == 5, grp.mkString(","))
+  }
+
   test("property: binary value ops never throw, null on unsupported combos") {
     forAllN(gen2) { case (a, b) =>
       val outs = Seq(

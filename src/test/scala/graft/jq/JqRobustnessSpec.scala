@@ -1,5 +1,9 @@
 package graft.jq
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.json.JsonText
 
@@ -104,5 +108,28 @@ class JqRobustnessSpec extends AnyFunSuite {
       val r = Interp.run("length", JsonText.parse("\"\\ud800\""))
       assert(r.nonEmpty)
     } catch { case e2: Exception => assert(e2.getMessage != null) }
+  }
+
+  test("jq_multi: a field whose evaluation overflows the stack is NULL, the others survive") {
+    // the program builds a 200,000-deep array without recursion, then
+    // serializing it recurses past any thread stack
+    val deep = "reduce range(0, 200000) as $i (0; [.]) | tostring"
+    val fields = Seq(
+      ("a", JqParser.parse(".a"), "long"),
+      ("deep", JqParser.parse(deep), "string"),
+      ("b", JqParser.parse(".b"), "string"))
+    val row = InternalRow(UTF8String.fromString("""{"a": 7, "b": "x"}"""))
+    // the same program at depth 3 works: the NULLs below come from the stack
+    val shallow = deep.replace("200000", "3")
+    assert(JqExtract(JqParser.parse(shallow), shallow, "string",
+      BoundReference(0, StringType, nullable = true)).eval(row).toString == "[[[0]]]")
+    // the single-program extract already takes the errors-as-data path
+    assert(JqExtract(JqParser.parse(deep), deep, "string",
+      BoundReference(0, StringType, nullable = true)).eval(row) == null)
+    val out = JqMulti(fields, "", BoundReference(0, StringType, nullable = true))
+      .eval(row).asInstanceOf[InternalRow]
+    assert(out.getLong(0) == 7)
+    assert(out.isNullAt(1))
+    assert(out.getUTF8String(2).toString == "x")
   }
 }

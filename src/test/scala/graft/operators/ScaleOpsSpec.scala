@@ -107,6 +107,20 @@ class ScaleOpsSpec extends SparkTestBase {
     assert(runs.toSeq == Seq((1L, 31L, 3L, 26L)), runs.mkString(","))
   }
 
+  test("sizedPartitions: estimated bytes over maxPartitionBytes, floored at parallelism") {
+    val df = spark.range(0, 20000).selectExpr("id", "repeat('x', 100) AS t")
+    val floor = spark.sparkContext.defaultParallelism
+    assert(Layout.sizedPartitions(df) == floor)
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, (size / (4 * floor)).toString)
+      // ceil(size / floor(size / 4p)) is 4p, or 4p + 1 when the split rounds down
+      assert(Seq(4 * floor, 4 * floor + 1).contains(Layout.sizedPartitions(df)))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("duplicateRuns on the fixture: every emitted run is byte-equal in both docs") {
     val runs = Dedup.duplicateRuns(docs, "doc_id", col("text"), k = 40, minRunLen = 80)
     val t1 = docs.select(col("doc_id").as("d1"), col("text").as("t1"))
